@@ -4,13 +4,14 @@ K-means is the second iterative workload (after regression) expressed
 in the reference's loop shape (R11): per-iteration model state — the
 centroids — lives in the DRIVER as plain constants, exactly like the
 reference keeps (w0_old, w1_old) on rank 0 (kernel.cu:132), and is
-folded into the next iteration's assignment expression as literals.
-That design has two scale properties:
+folded into the next iteration's assignment expression as ONE array
+literal. That design has three scale properties:
 - no lineage growth across iterations (each iteration is a fresh plan
-  over the cached input — nothing to checkpoint), and
+  over the cached input — nothing to checkpoint),
 - no join for assignment: k×dim constants ride into every task inside
-  the codegen'd expression (the broadcast-variable pattern, R14 done
-  right).
+  the expression (the broadcast-variable pattern, R14 done right), and
+- a round's plan is one SQL expression, built with one call however
+  many centers and dimensions there are (`assign_clusters`).
 
 IVF-ANN uses the same machinery with fixed coarse centers: assignment
 builds the inverted lists; a probe searches only its nProbe nearest
@@ -19,9 +20,10 @@ lists.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meta_iterative_mapreduce_spark.functions.vectors import dot_const, l2_norm
@@ -29,37 +31,37 @@ from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.registry import register
 
 
-def _dist_sq(col: Column | str, center: list[float]) -> Column:
-    """Squared L2 distance to a constant center, expanded as
-    ||v||² − 2·v·c + ||c||² (one pass over the array; ||c||² folds to a
-    literal)."""
-    c_norm_sq = sum(x * x for x in center)
-    v_norm_sq = F.aggregate(
-        F.transform(col, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return v_norm_sq - 2.0 * dot_const(col, center) + F.lit(c_norm_sq)
-
-
-def _partial_score(col: Column | str, center: list[float]) -> Column:
-    """−2·v·c + ||c||² — squared distance minus the per-row ||v||² term,
-    which is constant under argmin so it never needs computing."""
-    c_norm_sq = sum(x * x for x in center)
-    return -2.0 * dot_const(col, center) + F.lit(c_norm_sq)
+def _sql_double(x: float) -> str:
+    """Exact SQL text of a double: repr round-trips, and the D suffix
+    keeps it a double (an unsuffixed 1.5 would be a DECIMAL)."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"double('{x}')"
 
 
 def assign_clusters(df: DataFrame, vec_col: str, centers: list[list[float]]) -> DataFrame:
     """Add `cluster` = argmin over centers of squared L2 distance
     (deterministic tie-break: lowest center id wins).
 
-    Shape matters: the scores go into ONE array column and the argmin
-    is array_position(arr, array_min(arr)) — a when-chain argmin would
-    re-inline every distance expression into each comparison (Catalyst
-    project-collapse), blowing the expression tree up quadratically.
+    Scores are −2·v·c + ||c||² (||v||² is constant under argmin), from
+    ONE SQL expression with the centers as one array literal: a round's
+    plan costs one call to build, not one per center coordinate. The
+    argmin is array_position(scores, array_min(scores)) over that one
+    array column — a when-chain argmin would re-inline every distance
+    expression into each comparison (Catalyst project-collapse),
+    blowing the expression tree up quadratically.
     """
-    scores = F.array(*[_partial_score(F.col(vec_col), c) for c in centers])
-    cluster = (F.array_position(scores, F.array_min(scores)) - 1).cast("int")
+    structs = ", ".join(
+        f"named_struct('c', array({', '.join(map(_sql_double, c))}), "
+        f"'n', {_sql_double(sum(float(x) * float(x) for x in c))})"
+        for c in centers
+    )
+    v = "`" + vec_col.replace("`", "``") + "`"
+    scores = F.expr(
+        f"transform(array({structs}), __ctr -> aggregate(zip_with({v}, __ctr.c, "
+        "(x, y) -> CAST(x AS DOUBLE) * y), 0D, (acc, p) -> acc + p) * -2.0D + __ctr.n)"
+    )
+    # `cluster` reads the __scores column, not a copy of its expression
+    cluster = F.expr("CAST(array_position(__scores, array_min(__scores)) - 1 AS INT)")
     return df.withColumn("__scores", scores).withColumn("cluster", cluster)
 
 

@@ -5,8 +5,9 @@ doc per component).
 Algorithm: alternating large-star / small-star (Kiveris et al. 2014,
 "Connected Components in MapReduce and Beyond"), the standard
 shuffle-frugal CC for massive graphs: each round touches every edge
-once (two groupBy-min shuffles), converges in O(log² n) rounds without
-the long-chain blowup of naive label propagation, and never
+once (one SQL plan of three shuffles per round), converges in
+O(log² n) rounds without the long-chain blowup of naive label
+propagation, and never
 materializes anything bigger than the (shrinking) edge set. This is
 the engine's third iterative workload in the reference's loop shape
 (kernel.cu:135-217: distributed phase per round + tiny driver-side
@@ -36,40 +37,54 @@ from meta_iterative_mapreduce_spark.registry import register
 _COMPONENT_JACCARD_THRESHOLD = 0.4
 
 
-def _large_star(e: DataFrame) -> DataFrame:
-    """Large-star round: for every node u, connect every LARGER
-    neighbor v > u to m = min(Γ(u) ∪ {u})."""
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select("u", F.least("mn", F.col("u")).alias("m"))
-    )
-    return (
-        sym.join(mins, "u")
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+# One large-star + small-star round (Kiveris et al. 2014) over the
+# distinct edge set {e}, built with one call. Large-star: for every node
+# u, connect every LARGER neighbor v > u to m = min(Γ(u) ∪ {u}); its
+# edges come out oriented (v > m), and collect_set in small-star's
+# grouping deduplicates them. Small-star: for every node u, connect its
+# smaller neighbors N(u) and u itself to m = min(N(u)). A per-node
+# collect_set + explode replaces each groupBy-min-then-join, so a
+# round is three exchanges: two groupings and the closing DISTINCT.
+_STAR_ROUND_SQL = """
+WITH sym AS (SELECT u, v FROM {e} UNION ALL SELECT v, u FROM {e}),
+large AS (
+    SELECT u, least(u, array_min(ns)) AS m, ns
+    FROM (SELECT u, collect_set(v) AS ns FROM sym GROUP BY u)
+),
+small AS (
+    SELECT u, collect_set(v) AS ns
+    FROM (SELECT explode(filter(ns, x -> x > u)) AS u, m AS v FROM large)
+    GROUP BY u
+)
+SELECT DISTINCT w AS u, m AS v
+FROM (SELECT explode(array_union(ns, array(u))) AS w, array_min(ns) AS m FROM small)
+WHERE w != m
+"""
 
+def _observed(obs, timeout_s: float = 60.0) -> dict | None:
+    """obs.get, or None if the metrics are not posted within timeout_s.
 
-def _small_star(e: DataFrame) -> DataFrame:
-    """Small-star round: orient edges large→small; for every node u,
-    connect its smaller neighbors N(u) and u itself to m = min(N(u))."""
-    oriented = e.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).where(F.col("u") != F.col("v"))
-    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))  # m < u
-    members = oriented.select("u", "v").union(
-        oriented.select("u", F.col("u").alias("v")).distinct()
-    )
-    return (
-        members.join(mins, "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    obs.get blocks until the QueryExecutionListener posts the job's
+    metrics; on a runtime where the action never fires the listener
+    (e.g. Spark Connect) it would hang the loop silently. So it runs on
+    a daemon thread; a miss leaves that thread parked and returns None.
+    A real error from the fetch is re-raised."""
+    import threading
+
+    holder: dict = {}
+
+    def _fetch() -> None:
+        try:
+            holder["m"] = obs.get
+        except BaseException as exc:  # noqa: BLE001 — re-raised below
+            holder["err"] = exc
+
+    t = threading.Thread(target=_fetch, daemon=True)
+    t.start()
+    t.join(timeout_s)
+    if "err" in holder:
+        raise holder["err"]
+    return holder.get("m")
 
 
 def connected_components(
@@ -80,10 +95,12 @@ def connected_components(
 
     `edges` must have two numeric columns (u, v); self-loops are
     ignored. Iterates large-star/small-star to fixpoint (edge set
-    stable). Each round shuffles only the current edge set — which
-    shrinks toward one star edge per non-root node — and the cheap
-    per-round fixpoint test is a one-pass (count, xor-hash) signature;
-    the exact subtract runs only when the signature matches.
+    stable). Each round is one SQL plan (`_STAR_ROUND_SQL`) with three
+    exchanges, each over the current edge set — which shrinks toward
+    one star edge per non-root node. The cheap per-round fixpoint test
+    is a one-pass (count, xor-hash) signature; the exact subtract runs
+    only when the signature matches, or in every round whose signature
+    was not posted in time.
 
     `on_round(round_idx, n_edges, seconds)` is an optional profiling
     hook (tools/cc_profile.py) — instrumentation shares THIS loop
@@ -93,57 +110,29 @@ def connected_components(
 
     from pyspark.sql import Observation
 
-    def _ckpt_with_sig(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    spark = edges.sparkSession
+
+    def _ckpt_with_sig(df: DataFrame) -> tuple[DataFrame, tuple[int, int] | None]:
         """Eagerly checkpoint the edge set and return its one-pass
         (count, xxhash64 xor-fold) signature, collected via observe()
         DURING the checkpoint job — no separate signature job per
-        round (optimization r14; was one extra agg job per round). A
-        differing signature PROVES non-convergence without the O(E)
-        anti-join the exact test costs; only a matching signature
+        round. A differing signature PROVES non-convergence without the
+        O(E) anti-join the exact test costs; only a matching signature
         escalates to the exact subtract (once, at the true fixpoint).
-        The r7 50M-edge profile showed why the sig (not the count)
-        gates the subtract: the edge COUNT goes flat after round 1
-        while the content keeps changing for ~log(diameter) more
-        rounds. XOR fold, not SUM: overflow-free under ANSI mode and
-        order-independent; the edge set is distinct so nothing
-        self-cancels."""
+        The sig (not the count) gates the subtract because the edge
+        COUNT goes flat after round 1 while the content keeps changing
+        for ~log(diameter) more rounds. XOR fold, not SUM: overflow-free
+        under ANSI mode and order-independent; the edge set is distinct
+        so nothing self-cancels. The signature is None if it was not
+        posted in time."""
         obs = Observation()
         d = df.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.bit_xor(F.xxhash64("u", "v")).alias("h"),
         ).localCheckpoint(eager=True)
-        # ADVICE r14: obs.get blocks until the QueryExecutionListener
-        # posts the checkpoint job's metrics; on a runtime where the
-        # checkpoint action never fires the listener (e.g. Spark
-        # Connect) that wait would hang the CC loop silently. Fetch on
-        # a daemon thread with a generous deadline so a listener miss
-        # fails LOUDLY instead.
-        import threading
-
-        holder: dict = {}
-
-        def _fetch() -> None:
-            try:
-                holder["m"] = obs.get
-            except BaseException as exc:  # noqa: BLE001 — re-raised below
-                holder["err"] = exc
-
-        t = threading.Thread(target=_fetch, daemon=True)
-        t.start()
-        t.join(60)
-        if "err" in holder:
-            raise holder["err"]  # the REAL failure, not a fake timeout
-        if "m" not in holder:
-            # the daemon fetch thread stays parked in obs.get, but the
-            # loop dies loudly here instead of hanging the session
-            raise RuntimeError(
-                "connected_components: observed metrics not posted "
-                "within 60s of the eager localCheckpoint — the "
-                "runtime did not fire the observation listener"
-            )
-        m = holder["m"]
-        return d, (m["n"] or 0, m["h"] or 0)
+        m = _observed(obs)
+        return d, None if m is None else (m["n"] or 0, m["h"] or 0)
 
     e, prev_sig = _ckpt_with_sig(
         edges.select(F.col(edges.columns[0]).alias("u"), F.col(edges.columns[1]).alias("v"))
@@ -151,17 +140,22 @@ def connected_components(
         .distinct()
     )
     for i in range(max_iter):
-        if prev_sig[0] == 0:
+        if prev_sig is not None and prev_sig[0] == 0:
             break
         t0 = _time.time()
-        e_new, new_sig = _ckpt_with_sig(_small_star(_large_star(e)))
+        e_new, new_sig = _ckpt_with_sig(spark.sql(_STAR_ROUND_SQL, e=e))
         # signature match is necessary but not sufficient (xor-hash
         # collisions exist in principle), so the fixpoint is always
-        # CONFIRMED by the exact set test — which now runs only when
-        # the signature says it can possibly pass.
-        converged = new_sig == prev_sig and e_new.subtract(e).isEmpty()
+        # CONFIRMED by the exact set test — which runs only when the
+        # signature says it can possibly pass. Without both signatures
+        # the exact test compares the sets both ways.
+        if new_sig is None or prev_sig is None:
+            converged = e_new.subtract(e).isEmpty() and e.subtract(e_new).isEmpty()
+        else:
+            converged = new_sig == prev_sig and e_new.subtract(e).isEmpty()
         if on_round is not None:
-            on_round(i + 1, new_sig[0], round(_time.time() - t0, 1))
+            n_edges = e_new.count() if new_sig is None else new_sig[0]
+            on_round(i + 1, n_edges, round(_time.time() - t0, 1))
         old = e
         e, prev_sig = e_new, new_sig
         old.unpersist()
@@ -171,17 +165,11 @@ def connected_components(
         raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
     # stars point members at roots (the root itself never appears on
     # the member side, so add root→root rows); groupBy-min is
-    # belt-and-braces
-    members = e.groupBy(F.col("u").alias("node")).agg(
-        F.min("v").alias("component_id")
-    )
-    roots = (
-        e.select(F.col("v").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component_id"))
-    )
-    return members.unionByName(roots).groupBy("node").agg(
-        F.min("component_id").alias("component_id")
+    # belt-and-braces, and one grouping serves both kinds of row
+    return spark.sql(
+        "SELECT node, min(c) AS component_id FROM (SELECT u AS node, v AS c "
+        "FROM {e} UNION ALL SELECT v, v FROM {e}) GROUP BY node",
+        e=e,
     )
 
 
@@ -707,8 +695,18 @@ def q_graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     two degree broadcasts, one anti-join against the edge set. At
     100 TB this is the standard people-you-may-know MapReduce shape;
     the center cap is what keeps it from exploding on hubs, exactly
-    like the triangle counter's degree orientation."""
-    return link_predict_pairs(copurchase_edges(spark, sf_dir))
+    like the triangle counter's degree orientation.
+
+    The edge table feeds the neighbor aggregate AND the adjacency
+    anti-join; unpersisted, the whole upstream pair pipeline would
+    recompute per leg. It is persisted here, the small result is
+    materialized, and the cache is released before return."""
+    edges = copurchase_edges(spark, sf_dir).persist()
+    try:
+        out = link_predict_pairs(edges).localCheckpoint(eager=True)
+    finally:
+        edges.unpersist()
+    return out
 
 
 def link_predict_pairs(
@@ -719,15 +717,9 @@ def link_predict_pairs(
     with >= 2 common neighbors through centers of degree <= center_cap,
     scored in integer basis points.
 
-    Cache ownership (ADVICE r14): the returned (lazy) DataFrame reads
-    the persisted `edges`/`nbrs` tables, so this function cannot
-    unpersist them — CALLERS own cache release once the result is
-    materialized (`spark.catalog.clearCache()` or unpersisting via
-    their own references); bench.py clears caches between queries."""
-    # edges feeds the neighbor aggregate AND the adjacency anti-join;
-    # unpersisted, the whole upstream pair pipeline recomputes per leg
-    # (same rationale as q_graph_triangles' persisted `pairs`).
-    edges = edges.persist()
+    `edges` is read twice (the neighbor aggregate and the adjacency
+    anti-join): callers that build it from a pipeline persist it and
+    own its release, as q_graph_link_predict does."""
     # Wedges through each non-hub center are emitted INLINE from the
     # center's sorted neighbor array (C(d, 2) combinations via
     # higher-order functions) instead of the edge-table self-join on u
@@ -740,7 +732,7 @@ def link_predict_pairs(
     # count shuffle.
     nbrs = edges.groupBy("u").agg(
         F.sort_array(F.collect_list("v")).alias("vs")
-    ).persist()
+    )
     deg = nbrs.select("u", F.size("vs").alias("d"))
     per_center = nbrs.filter(F.size("vs") <= center_cap)
     wedge = (

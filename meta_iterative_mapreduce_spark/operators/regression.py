@@ -13,14 +13,14 @@ Spark-first re-expression:
   (kernel.cu:62-63) is Spark's built-in `regr_slope`/`regr_intercept`.
 - The two reduce levels are two nested groupBys (deterministic chunk
   keys `l_orderkey % K`, never engine hashes — SURVEY.md §2.2 rule b).
-- The interactive batch loop (kernel.cu:190-196) becomes either a
-  driver loop over cached DataFrames (`iterative_fit_loop`, faithful)
-  or — because the reference's weight "rebroadcast" is dead code
-  (SURVEY.md §1.2.2) so batches are independent — a SINGLE aggregation
-  computing every batch fit in one shuffle, with the EMA recursion
-  applied to the O(#batches) collected scalars (`iterative_ema_fit`).
-  At 100 TB the single-pass form is the right plan: one wide shuffle
-  keyed on (batch, chunk), no per-batch job launch overhead.
+- The interactive batch loop (kernel.cu:190-196): the reference's
+  weight "rebroadcast" is dead code (SURVEY.md §1.2.2), so batches are
+  independent. Every batch fit comes from a SINGLE aggregation keyed
+  on (batch, chunk) (`batch_fits`), and the EMA recursion runs in the
+  driver over the O(#batches) collected scalars. `iterative_fit_loop`
+  (the reference's loop: NULL batch keys belong to no batch) and
+  `iterative_ema_fit` (the flagship's) share that plan and that loop,
+  so neither launches a job per batch.
 
 Both `exact` (merge sufficient statistics ⇒ identical to single-machine
 OLS) and `averaged` (reference-faithful uniform model averaging,
@@ -183,6 +183,38 @@ def batch_fits(
     )
 
 
+def _ordered_batch_fits(df: DataFrame, x: str, y: str, batch: Column, chunk: Column) -> list:
+    """`batch_fits` rows in batch order (Spark's: NULL first), sorted in
+    one partition — the rows are O(#batches) — so there is no
+    range-partition sample job and no extra exchange."""
+    fits = batch_fits(df, x, y, batch, chunk)
+    return fits.coalesce(1).sortWithinPartitions("batch").collect()
+
+
+def _ema_over(
+    fits: list, n_batches: int, alpha: float, eps: float, max_iter: int | None
+) -> FitResult:
+    """EMA + ε-convergence over ordered (f0, f1) batch fits, in the
+    driver — the same place the reference keeps (w0_old, w1_old) on
+    rank 0 (kernel.cu:132). Stops after `max_iter` fits or once
+    max(|Δw0|, |Δw1|) < eps."""
+    w0 = w1 = float("nan")
+    n_iters, converged = 0, False
+    for f0, f1 in fits:
+        if max_iter is not None and n_iters >= max_iter:
+            break
+        n_iters += 1
+        if n_iters == 1:
+            w0, w1 = f0, f1
+            continue
+        new_w0, new_w1 = ema_step(w0, f0, alpha), ema_step(w1, f1, alpha)
+        converged = max(abs(new_w0 - w0), abs(new_w1 - w1)) < eps
+        w0, w1 = new_w0, new_w1
+        if converged:
+            break
+    return FitResult(w0, w1, n_iters, n_batches, converged)
+
+
 def iterative_ema_fit(
     df: DataFrame,
     x: str,
@@ -199,28 +231,16 @@ def iterative_ema_fit(
     convergence decision (kernel.cu:175-188) with
     max(|Δw0|, |Δw1|) < eps. Batch fits are computed in a single Spark
     job (see `batch_fits`); the inherently-sequential EMA recursion
-    runs over the collected O(#batches) scalars in the driver — the
-    same place the reference keeps (w0_old, w1_old) on rank 0
-    (kernel.cu:132).
+    runs over the collected O(#batches) scalars (`_ema_over`). Every
+    group with a fit is a batch, the NULL batch key included;
+    `n_batches` counts them.
     """
-    rows = batch_fits(df, x, y, batch, chunk).orderBy("batch").collect()
-    rows = [r for r in rows if r["f0"] is not None and r["f1"] is not None]
-    if not rows:
-        return FitResult(float("nan"), float("nan"), 0, 0, False)
-    w0, w1 = rows[0]["f0"], rows[0]["f1"]
-    n_iters, converged = 1, False
-    for r in rows[1:]:
-        if max_iter is not None and n_iters >= max_iter:
-            break
-        new_w0 = ema_step(w0, r["f0"], alpha)
-        new_w1 = ema_step(w1, r["f1"], alpha)
-        n_iters += 1
-        if max(abs(new_w0 - w0), abs(new_w1 - w1)) < eps:
-            w0, w1 = new_w0, new_w1
-            converged = True
-            break
-        w0, w1 = new_w0, new_w1
-    return FitResult(w0, w1, n_iters, len(rows), converged)
+    fits = [
+        (r["f0"], r["f1"])
+        for r in _ordered_batch_fits(df, x, y, batch, chunk)
+        if r["f0"] is not None and r["f1"] is not None
+    ]
+    return _ema_over(fits, len(fits), alpha, eps, max_iter)
 
 
 def iterative_fit_loop(
@@ -232,57 +252,25 @@ def iterative_fit_loop(
     alpha: float = DEFAULT_ALPHA,
     eps: float = 1e-6,
     max_iter: int = 100,
-    checkpoint_every: int = 10,
 ) -> FitResult:
-    """Reference-faithful driver loop: one Spark job per batch (R11).
+    """The reference's batch loop (kernel.cu:135-217, R11): EMA over
+    the per-batch fits in batch order, stopping at ε or `max_iter`.
 
-    Kept for workloads where iteration t+1 genuinely depends on the
-    model from iteration t (unlike the reference, whose weight
-    rebroadcast is dead code — SURVEY.md §1.2.2). Caches the chunked
-    input once; `localCheckpoint` would cut lineage for long loops
-    (not needed here since each batch fit reads the same cached df).
+    The reference's batches do not depend on each other (its weight
+    rebroadcast is dead code — SURVEY.md §1.2.2), so every batch fit
+    comes from ONE aggregation (`batch_fits`) and only the EMA runs
+    per round, in the driver: the Spark job count does not grow with
+    the number of batches or with `max_iter`. Rows whose batch key is
+    NULL belong to no batch, and a batch whose chunk fits are all NULL
+    is skipped; `n_batches` counts every distinct batch key.
     """
-    tagged = df.select(
-        batch.alias("batch"), chunk.alias("chunk"), F.col(x), F.col(y)
-    ).cache()
-    try:
-        batches = [r["batch"] for r in tagged.select("batch").distinct().orderBy("batch").collect()]
-        w0 = w1 = None
-        n_iters, converged = 0, False
-        for b in batches:
-            if n_iters >= max_iter:
-                break
-            fit = (
-                tagged.filter(F.col("batch") == b)
-                .groupBy("chunk")
-                .agg(
-                    F.regr_intercept(F.col(y), F.col(x)).alias("w0"),
-                    F.regr_slope(F.col(y), F.col(x)).alias("w1"),
-                )
-                .agg(F.avg("w0").alias("f0"), F.avg("w1").alias("f1"))
-                .collect()[0]
-            )
-            if fit["f0"] is None or fit["f1"] is None:
-                continue
-            n_iters += 1
-            if w0 is None:
-                w0, w1 = fit["f0"], fit["f1"]
-                continue
-            new_w0, new_w1 = ema_step(w0, fit["f0"], alpha), ema_step(w1, fit["f1"], alpha)
-            if max(abs(new_w0 - w0), abs(new_w1 - w1)) < eps:
-                w0, w1 = new_w0, new_w1
-                converged = True
-                break
-            w0, w1 = new_w0, new_w1
-        return FitResult(
-            w0 if w0 is not None else float("nan"),
-            w1 if w1 is not None else float("nan"),
-            n_iters,
-            len(batches),
-            converged,
-        )
-    finally:
-        tagged.unpersist()
+    rows = _ordered_batch_fits(df, x, y, batch, chunk)
+    fits = [
+        (r["f0"], r["f1"])
+        for r in rows
+        if r["batch"] is not None and r["f0"] is not None and r["f1"] is not None
+    ]
+    return _ema_over(fits, len(rows), alpha, eps, max_iter)
 
 
 # ---------------------------------------------------------------------------

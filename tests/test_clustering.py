@@ -4,15 +4,29 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.functions.vectors import dot_const
 from meta_iterative_mapreduce_spark.io import load_table
 from meta_iterative_mapreduce_spark.operators import clustering as C
+
+
+def _dist_sq(col, center: list[float]):
+    """Squared L2 distance to a constant center, expanded as
+    ||v||² − 2·v·c + ||c||² (one pass over the array; ||c||² folds to a
+    literal)."""
+    c_norm_sq = sum(x * x for x in center)
+    v_norm_sq = F.aggregate(
+        F.transform(col, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return v_norm_sq - 2.0 * dot_const(col, center) + F.lit(c_norm_sq)
 
 
 def _inertia(e, centers) -> float:
     assigned = C.assign_clusters(e, "embedding", centers)
     d = None
     for j, c in enumerate(centers):
-        dj = C._dist_sq(F.col("embedding"), c)
+        dj = _dist_sq(F.col("embedding"), c)
         d = dj if j == 0 else F.when(F.col("cluster") == j, dj).otherwise(d)
     return assigned.withColumn("d", d).agg(F.sum("d")).collect()[0][0]
 
@@ -37,6 +51,69 @@ def test_assignment_covers_all_rows_once(spark, sf_dir):
     clusters = {r["cluster"] for r in assigned.select("cluster").distinct().collect()}
     assert clusters.issubset(set(range(4)))
 
+
+
+def _literal_assign(df, vec_col, centers):
+    """The per-coordinate-literal assignment assign_clusters replaced —
+    one F.lit per center coordinate — kept as the bit-level reference."""
+    scores = F.array(*[
+        -2.0 * dot_const(F.col(vec_col), c) + F.lit(sum(x * x for x in c))
+        for c in centers
+    ])
+    cluster = (F.array_position(scores, F.array_min(scores)) - 1).cast("int")
+    return df.withColumn("__scores", scores).withColumn("cluster", cluster)
+
+
+def _bits(xs) -> list:
+    """Doubles as bit patterns, every NaN folded to one pattern."""
+    import math
+    import struct
+
+    return [
+        "nan" if x is not None and math.isnan(x) else
+        (None if x is None else struct.pack("<d", x))
+        for x in xs
+    ]
+
+
+def test_assign_scores_bit_identical_to_literal_expression(spark):
+    """Scores and clusters equal the per-coordinate-literal expression
+    bit for bit, for negative, tiny (~1e-300), huge (~1e300: ||c||²
+    overflows to inf) and non-finite centers."""
+    vecs = [
+        [0.5, -1.25, 3.0],
+        [-2.0, 0.0, 1e-3],
+        [1e-300, -3e-300, 2.5e-301],
+        [7.0, 7.0, -7.0],
+    ]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)], "id int, v array<double>"
+    )
+    inf, nan = float("inf"), float("nan")
+    center_sets = [
+        [[-1.5, -0.1, -2.75], [0.1, 0.2, 0.30000000000000004], [-0.0, 0.0, 1.0]],
+        [[1e-300, -2e-300, 5e-324], [-1.7e-300, 3e-299, 1e-310]],
+        [[1e300, -1e300, 1e299], [-1.5e300, 2e300, -3e299], [1.0, 2.0, 3.0]],
+        [[inf, 0.0, 1.0], [nan, 1.0, 2.0], [-inf, 1.0, 1.0], [0.5, -0.5, 0.25]],
+    ]
+    for centers in center_sets:
+        got = C.assign_clusters(df, "v", centers).orderBy("id").collect()
+        want = _literal_assign(df, "v", centers).orderBy("id").collect()
+        for g, w in zip(got, want):
+            assert _bits(g["__scores"]) == _bits(w["__scores"]), (centers, g, w)
+            assert g["cluster"] == w["cluster"], (centers, g, w)
+
+
+def test_kmeans_bit_identical_to_literal_expression(spark, sf_dir, monkeypatch):
+    """Centers and SSEs of k-means equal, bit for bit, those of the same
+    loop run with the per-coordinate-literal assignment."""
+    e = load_table(spark, sf_dir, "embeddings")
+    init = C._init_centers(spark, sf_dir, 4)
+    got = C.kmeans(e, "embedding", init, n_iters=2)
+    monkeypatch.setattr(C, "assign_clusters", _literal_assign)
+    want = C.kmeans(e, "embedding", init, n_iters=2)
+    assert got.centers == want.centers
+    assert got.sses == want.sses and got.n_assigned == want.n_assigned
 
 def test_pca_power_is_eigenpair(spark, sf_dir):
     """The returned (eigval, v) must satisfy G v ~= eigval * v — the

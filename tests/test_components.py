@@ -1,5 +1,6 @@
 """connected_components (large-star/small-star) vs a union-find model
-on randomized graphs, plus shape checks on the registered query."""
+and vs the DataFrame composition of its rounds on randomized graphs,
+plus shape checks on the registered queries."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from meta_iterative_mapreduce_spark.operators import components as C
 from meta_iterative_mapreduce_spark.operators.components import (
     connected_components,
     q_dedup_components,
@@ -60,6 +62,149 @@ def test_connected_components_matches_union_find(spark):
             )
         } - set(got)
         assert not missing, (trial, missing)
+
+
+
+def _large_star(e):
+    """Reference large-star round (groupBy-min, join, distinct): for
+    every node u, connect every LARGER neighbor v > u to
+    m = min(Γ(u) ∪ {u})."""
+    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    mins = (
+        sym.groupBy("u")
+        .agg(F.min("v").alias("mn"))
+        .select("u", F.least("mn", F.col("u")).alias("m"))
+    )
+    return (
+        sym.join(mins, "u")
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _small_star(e):
+    """Reference small-star round: orient edges large→small; for every
+    node u, connect its smaller neighbors N(u) and u itself to
+    m = min(N(u))."""
+    oriented = e.select(
+        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+    ).where(F.col("u") != F.col("v"))
+    mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
+    members = oriented.select("u", "v").union(
+        oriented.select("u", F.col("u").alias("v")).distinct()
+    )
+    return (
+        members.join(mins, "u")
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _edge_set(df) -> set:
+    return {(r[0], r[1]) for r in df.collect()}
+
+
+def _reference_rounds(spark, edges: list[tuple[int, int]]) -> list[set]:
+    """Edge set after each round of the reference composition
+    _small_star(_large_star(e)), to fixpoint. Every round is also run
+    through the operator's one-call round plan on the SAME input and
+    must give the same edge set."""
+    cur = {(u, v) for u, v in edges if u != v}
+    out = []
+    while cur:
+        e = spark.createDataFrame(sorted(cur), "u long, v long")
+        nxt = _edge_set(_small_star(_large_star(e)))
+        assert _edge_set(spark.sql(C._STAR_ROUND_SQL, e=e)) == nxt, len(out)
+        out.append(nxt)
+        if nxt == cur:
+            break
+        cur = nxt
+    return out
+
+
+def _cc_rounds(edges_df) -> tuple[dict, list[int]]:
+    counts = []
+    labels = connected_components(
+        edges_df, on_round=lambda i, n, s: counts.append(n)
+    ).collect()
+    return {r.node: r.component_id for r in labels}, counts
+
+
+def _random_graph(rng: random.Random, n: int, offset: int = 0) -> list[tuple[int, int]]:
+    return [
+        (offset + rng.randrange(n), offset + rng.randrange(n))
+        for _ in range(int(n * rng.uniform(0.5, 1.5)))
+    ]
+
+
+def test_round_plan_matches_reference_composition(spark):
+    """Per round, the operator's edge count equals that of the
+    reference _large_star/_small_star composition (whose edge SETS
+    the one-call round plan reproduces round by round), and the labels
+    equal union-find's. The graph is a chain, a hub with 10⁴ leaves
+    (on both sides of its id) and two random graphs, on disjoint ids,
+    so one run covers every shape."""
+    rng = random.Random(23)
+    chain = rng.sample(range(1000), 64)
+    edges = list(zip(chain, chain[1:]))
+    edges += [(15_000, x) for x in range(10_000, 20_001) if x != 15_000]
+    edges += _random_graph(rng, 120, 30_000) + _random_graph(rng, 300, 40_000)
+    want_rounds = _reference_rounds(spark, edges)
+    labels, counts = _cc_rounds(spark.createDataFrame(edges, "u long, v long"))
+    assert counts == [len(r) for r in want_rounds]
+    assert len(counts) >= 4
+    assert labels == _union_find_components(0, [(u, v) for u, v in edges if u != v])
+
+
+def test_missing_signature_falls_back_to_exact_test(spark, monkeypatch):
+    """When the observed signature is not posted in time, each round
+    uses the exact set test instead of failing: same rounds, same
+    labels."""
+    df = spark.createDataFrame(_random_graph(random.Random(29), 120), "u long, v long")
+    want = _cc_rounds(df)
+    assert len(want[1]) >= 2
+    monkeypatch.setattr(C, "_observed", lambda obs, timeout_s=0: None)
+    assert _cc_rounds(df) == want
+
+
+def test_cc_job_count_per_round_is_bounded(spark, count_jobs):
+    """Each star round is one plan of three exchanges plus its
+    checkpoint: at most 4 Spark jobs per round, plus a fixed cost for
+    the initial distinct and the final exact fixpoint test."""
+    chain = random.Random(5).sample(range(500), 100)
+    df = spark.createDataFrame(list(zip(chain, chain[1:])), "u long, v long")
+    counts = []
+    _, jobs = count_jobs(
+        lambda: connected_components(df, on_round=lambda i, n, s: counts.append(n))
+    )
+    assert len(counts) >= 3
+    assert jobs <= 4 * len(counts) + 6, (jobs, len(counts))
+
+
+def test_link_predict_query_releases_its_cache(spark, sf_dir):
+    """q_graph_link_predict leaves no persisted table behind: once its
+    result's own local checkpoint is released, the session's persistent
+    RDDs are back to where they started."""
+    from meta_iterative_mapreduce_spark.operators.components import (
+        q_graph_link_predict,
+    )
+
+    sc = spark.sparkContext
+
+    def persistent() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
+    out = q_graph_link_predict(spark, sf_dir)
+    assert out.count() == len(out.collect())
+    added = persistent() - before
+    plan = out._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(True)  # the result's own local checkpoint
+    assert not persistent() - before, added
 
 
 def test_dedup_components_partition_properties(spark, sf_dir):
