@@ -287,10 +287,7 @@ def q_sketch_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the global sketch is a fold over the per-group partials — the
     # partial list is group-count-sized (3 flags), never data-sized.
     glob = per.agg(F.collect_list("sk").alias("sks")).select(
-        F.expr(
-            "aggregate(slice(sks, 2, size(sks) - 1), sks[0],"
-            " (a, x) -> kll_sketch_merge_double(a, x))"
-        ).alias("sk")
+        kll_fold("sks").alias("sk")
     )
     ests = glob.select(
         F.kll_sketch_get_quantile_double("sk", F.lit(0.5)).alias("e50"),
@@ -299,26 +296,54 @@ def q_sketch_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("l_extendedprice")
     counts = li.crossJoin(F.broadcast(ests)).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(p < F.col("e50"), 1).otherwise(0)).alias("lt50"),
-        F.sum(F.when(p <= F.col("e50"), 1).otherwise(0)).alias("le50"),
-        F.sum(F.when(p < F.col("e99"), 1).otherwise(0)).alias("lt99"),
-        F.sum(F.when(p <= F.col("e99"), 1).otherwise(0)).alias("le99"),
+        count_where(p < F.col("e50")).alias("lt50"),
+        count_where(p <= F.col("e50")).alias("le50"),
+        count_where(p < F.col("e99")).alias("lt99"),
+        count_where(p <= F.col("e99")).alias("le99"),
     )
     return counts.select(
         F.lit("ALL").alias("scope"),
         "n_rows",
+        *kll_rank_flags("n_rows"),
+    )
+
+
+def kll_fold(partials: str) -> F.Column:
+    """One KLL sketch from an array column of partial sketches: a fold
+    of the binary kll_sketch_merge_double, NULL for an empty array."""
+    return F.expr(
+        f"aggregate(slice({partials}, 2, greatest(size({partials}) - 1, 0)),"
+        f" try_element_at({partials}, 1),"
+        " (a, x) -> kll_sketch_merge_double(a, x))"
+    )
+
+
+def count_where(cond: F.Column) -> F.Column:
+    """Aggregate counting rows where `cond` holds: 0, not NULL, over
+    zero rows."""
+    return F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0))
+
+
+def kll_rank_flags(n: str) -> list[F.Column]:
+    """The KLL queries' (median_ok, p99_ok) from the lt50/le50/lt99/le99
+    counts over `n` values: the median estimate's rank lies in
+    [0.40n, 0.60n] and the p99 estimate's in [0.97n, n). Both hold
+    vacuously on empty input, as the oracles state."""
+    n_ = F.col(n)
+    empty = n_ == 0
+    return [
         (
-            (F.col("le50") * 5 >= F.col("n_rows") * 2)
-            & (F.col("lt50") * 5 <= F.col("n_rows") * 3)
+            (
+                (F.col("le50") * 5 >= n_ * 2)
+                & (F.col("lt50") * 5 <= n_ * 3)
+            )
+            | empty
         ).alias("median_ok"),
         (
-            (F.col("le99") * 100 >= F.col("n_rows") * 97)
-            & (
-                (F.col("lt99") < F.col("n_rows"))
-                | (F.col("n_rows") == 0)  # vacuous truth on empty input
-            )
+            ((F.col("le99") * 100 >= n_ * 97) & (F.col("lt99") < n_))
+            | empty
         ).alias("p99_ok"),
-    )
+    ]
 
 
 @register(

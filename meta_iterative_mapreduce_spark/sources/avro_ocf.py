@@ -51,6 +51,7 @@ formats are part of the engine surface the north star adds.
 from __future__ import annotations
 
 import bz2
+import functools
 import io
 import json
 import lzma
@@ -63,6 +64,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meta_iterative_mapreduce_spark.io import load_table
+from meta_iterative_mapreduce_spark.sources.pysource import (
+    register_once,
+    rows_to_batches,
+)
 from meta_iterative_mapreduce_spark.sources.snappy_codec import (
     snappy_compress,
     snappy_decompress,
@@ -1158,7 +1163,15 @@ def register_avro_source(spark: SparkSession) -> None:
     (driver cost = the O(blocks) metadata walk of index_avro_blocks;
     executors seek straight to their block and decode only it). All
     files must share one schema — the first file's schema is the
-    scan's, per the single-writer-schema OCF convention."""
+    scan's, per the single-writer-schema OCF convention. Registered
+    once per session."""
+    register_once(spark, _avro_source_class())
+
+
+@functools.cache
+def _avro_source_class():
+    """Build (once per process) and return the `mimr_avro` DataSource
+    class."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceReader,
@@ -1223,10 +1236,10 @@ def register_avro_source(spark: SparkSession) -> None:
         ]
 
     # Plain Avro primitives (after [null, X] union unwrap) with an
-    # unambiguous pyarrow mapping — the record path's Arrow fast-path
-    # gate (same discipline as table_source._PA_OF_TYPE). Logical
-    # types, records, arrays, maps, enums and fixed route through the
-    # row path, whose coercions are pinned by the resolution tests.
+    # unambiguous pyarrow mapping: spans whose fields are all of these
+    # leave Python as RecordBatches. Logical types, records, arrays,
+    # maps, enums and fixed stay pickled tuples converted by Spark,
+    # whose coercions the resolution tests pin.
     _PA_OF_AVRO = {
         "string": "string",
         "long": "int64",
@@ -1258,26 +1271,20 @@ def register_avro_source(spark: SparkSession) -> None:
             reader_schema=spec["reader"],
         )
         pa_types = [_pa_primitive(f["type"]) for f in out_schema["fields"]]
+        rows = (tuple(rec[n] for n in names) for rec in recs)
         if names and all(pa_types):
-            # Arrow fast path (optimization r15, guide §4.1): the span's
-            # decoded records leave Python as ONE RecordBatch of typed
-            # columns instead of a pickled tuple per record — the
-            # Python data source API accepts RecordBatches directly.
+            # resolution already promoted every value to its reader
+            # type, so the records build typed columns as they are
             import pyarrow as pa
 
-            rows = list(recs)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        [r[n] for r in rows], type=pa.type_for_alias(t)
-                    )
-                    for n, t in zip(names, pa_types)
-                ],
-                names=names,
+            yield from rows_to_batches(
+                rows,
+                pa.schema(
+                    [(n, pa.type_for_alias(t)) for n, t in zip(names, pa_types)]
+                ),
             )
             return
-        for rec in recs:
-            yield tuple(rec[n] for n in names)
+        yield from rows
 
     class AvroReader(DataSourceReader):
         def __init__(self, options):
@@ -1446,11 +1453,7 @@ def register_avro_source(spark: SparkSession) -> None:
         def streamReader(self, schema):
             return AvroStreamReader(self.options)
 
-    try:
-        spark.dataSource.register(AvroSource)
-    except Exception as exc:  # already registered in this session
-        if "already" not in str(exc).lower():
-            raise
+    return AvroSource
 
 
 # ----------------------------------------------------------------- sink

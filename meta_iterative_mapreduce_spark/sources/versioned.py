@@ -619,8 +619,11 @@ def _file_stats_entry(table: str, rel: str) -> dict:
             if "." in name or name in bad:
                 continue  # nested leaf: not a top-level column
             st = col.statistics
-            mn = st.min if st is not None and st.has_min_max else None
-            mx = st.max if st is not None and st.has_min_max else None
+            try:
+                mn = st.min if st is not None and st.has_min_max else None
+                mx = st.max if st is not None and st.has_min_max else None
+            except NotImplementedError:  # e.g. a decimal stored as INT64
+                mn = mx = None
             if isinstance(mn, bytes):
                 try:
                     mn, mx = mn.decode(), mx.decode()

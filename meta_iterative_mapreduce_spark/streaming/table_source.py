@@ -42,19 +42,22 @@ is versioned_merge_sink.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from meta_iterative_mapreduce_spark.sources.pysource import (
+    register_once,
+    rows_to_batches,
+)
 from meta_iterative_mapreduce_spark.sources.versioned import (
     _mapping_state,
     file_byte_size,
     manifest_info,
     versions,
 )
-
-_INT_TYPES = {"byte", "short", "integer", "long"}
 
 
 def _off_pos(off: dict) -> tuple[int, float]:
@@ -77,8 +80,8 @@ def _plan_version_files(
     """Driver-side batch planning: the per-file read specs for every
     ADDED file strictly after offset `v_from` up to and including
     offset `v_to`, projecting each file to `fields` — the (logical,
-    physical, type) triples of the STREAM's declared schema, fixed at
-    stream start. Offsets are ints (whole versions, the legacy form)
+    physical, Arrow type) triples of the STREAM's declared schema,
+    fixed at stream start. Offsets are ints (whole versions, the legacy form)
     or `{"version", "index"}` dicts at FILE granularity — how
     maxFilesPerTrigger splits a wide version across micro-batches.
     Raises on vacuumed gaps and (unless ignore_changes) on non-append
@@ -131,22 +134,11 @@ def _plan_version_files(
         lo = si if (v == sv and si is not None) else 0
         hi = ei if (v == ev and ei is not None) else len(added)
         for rel in added[lo:hi]:
-            part_vals: dict[str, object] = {}
-            for seg in rel.split(os.sep):
-                if "=" not in seg:
-                    continue
-                from urllib.parse import unquote
-
-                name, _, raw = seg.partition("=")
-                val = unquote(raw)
-                part_vals[name] = (
-                    None if val == "__HIVE_DEFAULT_PARTITION__" else val
-                )
             specs.append(
                 {
                     "path": os.path.join(table, rel),
                     "fields": fields,
-                    "part_vals": part_vals,
+                    "part_vals": _hive_vals(rel),
                 }
             )
     return specs
@@ -269,8 +261,6 @@ def _plan_cdc_versions(
                 "key": key,
                 "removed": removed,
                 "added": added,
-                "removed_vals": {f: _hive_vals(f) for f in removed},
-                "added_vals": {f: _hive_vals(f) for f in added},
                 "dv_before": sorted(prev_dv),
                 "dv_delta": dv_delta,
                 "dv_removed": dv_removed,
@@ -282,6 +272,9 @@ def _plan_cdc_versions(
 
 
 def _hive_vals(rel: str) -> dict:
+    """{column: raw string | None} from a relpath's `col=value`
+    segments (Hive's default partition reads as NULL); _project casts
+    them to the declared types."""
     from urllib.parse import unquote
 
     out: dict[str, object] = {}
@@ -294,32 +287,64 @@ def _hive_vals(rel: str) -> dict:
     return out
 
 
-def _file_rows(path: str, fields: list[tuple], part_vals: dict):
-    """One file's rows as a list of tuples in field order (the shared
-    projection of _read_spec, reused by the CDC diff)."""
-    import pyarrow.parquet as pq
+def _project(tbl, fields: list[tuple], part_vals: dict, path: str):
+    """The one file-to-declared-schema projection every leg reads
+    through: a pyarrow Table whose columns are `fields`' logical names
+    in their declared Arrow types (`fields` carry the types of
+    `to_arrow_schema(declared schema)`, exactly what Spark's own tuple
+    path hands the JVM). Parquet columns are read under their physical
+    names with a SAFE cast, hive partition strings are cast to the
+    declared type, and columns the file predates are typed nulls.
 
-    tbl = pq.read_table(path)
-    names = set(tbl.schema.names)
+    The table's widenings (byte→short→int→long, float→double) are all
+    lossless casts. A value the declared type cannot hold exactly —
+    a hand-placed file storing 1.5 under a long column — raises a
+    ValueError naming the file and the column, never a truncation."""
+    import pyarrow as pa
+
     n = tbl.num_rows
     cols = []
-    for _logical, phys, typ in fields:
-        if phys in names:
-            vals = tbl.column(phys).to_pylist()
-        elif phys in part_vals:
-            raw = part_vals[phys]
-            v = (
-                None
-                if raw is None
-                else int(raw)
-                if typ in _INT_TYPES
-                else raw
-            )
-            vals = [v] * n
-        else:
-            vals = [None] * n
-        cols.append(vals)
-    return list(zip(*cols)) if cols else []
+    for logical, phys, typ in fields:
+        try:
+            if phys in tbl.column_names:
+                cols.append(tbl.column(phys).cast(typ))
+            elif phys in part_vals:
+                val = pa.array([part_vals[phys]], pa.string()).cast(typ)
+                cols.append(pa.repeat(val[0], n))
+            else:
+                cols.append(pa.nulls(n, typ))
+        except pa.ArrowException as exc:
+            raise ValueError(
+                f"{path}: column {logical!r} (physical {phys!r}) does not "
+                f"cast safely to the declared type {typ}: {exc}"
+            ) from exc
+    return pa.Table.from_arrays(
+        cols, schema=pa.schema([(lg, typ) for lg, _, typ in fields])
+    )
+
+
+def _read_spec(spec: dict):
+    """Executor-side file read (snapshot and append legs): one file's
+    declared-field projection as RecordBatches."""
+    import pyarrow.parquet as pq
+
+    path = spec["path"]
+    tbl = _project(pq.read_table(path), spec["fields"], spec["part_vals"], path)
+    yield from tbl.to_batches()
+
+
+def _cdc_schema(fields: list[tuple], key: str):
+    """Arrow schema of the change feed: (key, op, old_*, new_*), the
+    layout VersionedTableSource.schema() declares in CDC mode."""
+    import pyarrow as pa
+
+    typ = {lg: t for lg, _, t in fields}
+    others = [lg for lg, _, _ in fields if lg != key]
+    return pa.schema(
+        [(key, typ[key]), ("op", pa.string())]
+        + [(f"old_{c}", typ[c]) for c in others]
+        + [(f"new_{c}", typ[c]) for c in others]
+    )
 
 
 def _dv_positions(table: str, dv_files: list[str]) -> dict[str, set]:
@@ -338,122 +363,58 @@ def _dv_positions(table: str, dv_files: list[str]) -> dict[str, set]:
     return out
 
 
-def _take_rows(table: str, rel: str, positions: list[int], fields):
-    """Rows of one data file at the given positions, projected to
-    `fields`. Arrow `take` materializes ONLY the requested positions —
-    a 200-row DV against a 2M-row file converts 200 rows, not 2M (the
-    file's pages still stream through arrow)."""
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(os.path.join(table, rel))
-    part_vals = _hive_vals(rel)
-    sub = tbl.take([p for p in positions if p < tbl.num_rows])
-    names = set(sub.schema.names)
-    cols = []
-    for _logical, phys, typ in fields:
-        if phys in names:
-            cols.append(sub.column(phys).to_pylist())
-        elif phys in part_vals:
-            raw = part_vals[phys]
-            v = (
-                None
-                if raw is None
-                else int(raw)
-                if typ in _INT_TYPES
-                else raw
-            )
-            cols.append([v] * sub.num_rows)
-        else:
-            cols.append([None] * sub.num_rows)
-    return list(zip(*cols)) if cols else []
-
-
 def _read_cdc_spec(spec: dict):
-    """Executor-side CDC rows for one spec. 'insert' specs emit
-    (key, 'I', nulls..., new values...) straight off one added file;
-    'diff' specs replay read_changes' algebra in pyarrow for ONE
-    version: old side = removed files' rows visible at v-1 plus
-    carried rows newly DV-masked; new side = added files' rows visible
-    at v plus carried rows RESURRECTED by DV removal (a restore
-    undoing a merge-on-read delete); full-outer by key → I/U/D,
-    carried-identical rows dropped. Each side accumulates a LIST per
-    key, and matching keys emit every old×new pair — the same
+    """Executor-side CDC batches for one spec. 'insert' specs project
+    one added file column-wise into (key, 'I', old-nulls, new-values)
+    — the snapshot version streams EVERY table row through here, so no
+    per-row Python object is built. 'diff' specs replay read_changes'
+    algebra in Python for ONE version, over rows already projected to
+    the declared types: old side = removed files' rows visible at v-1
+    plus carried rows newly DV-masked; new side = added files' rows
+    visible at v plus carried rows RESURRECTED by DV removal (a
+    restore undoing a merge-on-read delete); full-outer by key →
+    I/U/D, carried-identical rows dropped. Each side accumulates a
+    LIST per key, and matching keys emit every old×new pair — the same
     multiplicity the batch full-outer join produces on duplicate keys
     (ADVICE r10: the dict-per-key shape silently dropped rows)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     fields = spec["fields"]
     key = spec["key"]
-    ki = [f[0] for f in fields].index(key)
+    schema = _cdc_schema(fields, key)
+    others = [lg for lg, _, _ in fields if lg != key]
     if spec["kind"] == "insert":
-        # Arrow fast path (same gate as _read_spec): 'insert' specs
-        # are a pure projection of one added file into the
-        # (key, 'I', old-nulls, new-values) feed layout — buildable
-        # column-wise with zero per-row Python tuples. The snapshot
-        # version streams EVERY table row through here, so this is
-        # the CDC stream's data-heavy leg.
-        part_vals = spec["part_vals"]
-        arrow_ok = all(
-            typ in _PA_OF_TYPE for _, _, typ in fields
-        ) and all(
-            typ in _INT_TYPES or typ == "string"
-            for _, phys, typ in fields
-            if phys in part_vals
+        path = spec["path"]
+        tbl = _project(pq.read_table(path), fields, spec["part_vals"], path)
+        n = tbl.num_rows
+        cols = (
+            [tbl.column(key), pa.repeat(pa.scalar("I"), n)]
+            + [pa.nulls(n, tbl.schema.field(c).type) for c in others]
+            + [tbl.column(c) for c in others]
         )
-        if arrow_ok:
-            import pyarrow as pa
-
-            others = [i for i in range(len(fields)) if i != ki]
-            names = (
-                [key, "op"]
-                + [f"old_{fields[i][0]}" for i in others]
-                + [f"new_{fields[i][0]}" for i in others]
-            )
-            try:
-                # materialized before yielding (same reasoning as
-                # _read_spec): the casts fire while the file's batches
-                # are built, so the row-path fallback below cannot
-                # duplicate rows
-                out_batches = []
-                for b in _file_batches(spec["path"], fields, part_vals):
-                    n = b.num_rows
-                    cols = (
-                        [b.column(ki), pa.array(["I"] * n, type=pa.string())]
-                        + [
-                            pa.nulls(n, type=b.schema.field(i).type)
-                            for i in others
-                        ]
-                        + [b.column(i) for i in others]
-                    )
-                    out_batches.append(
-                        pa.RecordBatch.from_arrays(cols, names=names)
-                    )
-            except pa.lib.ArrowInvalid:
-                # physical/declared type mismatch (ADVICE r14): route
-                # this file through the row path's per-value coercion
-                pass
-            else:
-                yield from out_batches
-                return
-        for row in _file_rows(spec["path"], fields, spec["part_vals"]):
-            yield (
-                row[ki],
-                "I",
-                *[None for i in range(len(fields)) if i != ki],
-                *[row[i] for i in range(len(fields)) if i != ki],
-            )
+        yield from pa.Table.from_arrays(cols, schema=schema).to_batches()
         return
     table = spec["table"]
+
+    def _rows(rel: str, positions: list[int] | None = None) -> list[dict]:
+        path = os.path.join(table, rel)
+        tbl = pq.read_table(path)
+        if positions is not None:
+            # Arrow `take` projects ONLY the requested positions — a
+            # 200-row DV against a 2M-row file converts 200 rows
+            tbl = tbl.take([p for p in positions if p < tbl.num_rows])
+        return _project(tbl, fields, _hive_vals(rel), path).to_pylist()
+
     before = _dv_positions(table, spec["dv_before"])
     after = _dv_positions(table, spec["dv_after"])
     carried_set = set(spec["carried"])
     old: dict = {}
     for rel in spec["removed"]:
         masked = before.get(rel, set())
-        rows = _file_rows(
-            os.path.join(table, rel), fields, spec["removed_vals"][rel]
-        )
-        for ri, row in enumerate(rows):
+        for ri, row in enumerate(_rows(rel)):
             if ri not in masked:
-                old.setdefault(row[ki], []).append(row)
+                old.setdefault(row[key], []).append(row)
     if spec["dv_delta"]:
         delta = _dv_positions(table, spec["dv_delta"])
         for rel, positions in delta.items():
@@ -461,17 +422,14 @@ def _read_cdc_spec(spec: dict):
                 continue  # DV on a removed file: already on the old side
             pre_masked = before.get(rel, set())
             want = sorted(p for p in positions if p not in pre_masked)
-            for row in _take_rows(table, rel, want, fields):
-                old.setdefault(row[ki], []).append(row)
+            for row in _rows(rel, want):
+                old.setdefault(row[key], []).append(row)
     new: dict = {}
     for rel in spec["added"]:
         masked = after.get(rel, set())
-        rows = _file_rows(
-            os.path.join(table, rel), fields, spec["added_vals"][rel]
-        )
-        for ri, row in enumerate(rows):
+        for ri, row in enumerate(_rows(rel)):
             if ri not in masked:
-                new.setdefault(row[ki], []).append(row)
+                new.setdefault(row[key], []).append(row)
     if spec.get("dv_removed"):
         resurrected = _dv_positions(table, spec["dv_removed"])
         for rel, positions in resurrected.items():
@@ -479,9 +437,8 @@ def _read_cdc_spec(spec: dict):
                 continue  # its file left too: the file diff covers it
             post_masked = after.get(rel, set())
             want = sorted(p for p in positions if p not in post_masked)
-            for row in _take_rows(table, rel, want, fields):
-                new.setdefault(row[ki], []).append(row)
-    others = [i for i in range(len(fields)) if i != ki]
+            for row in _rows(rel, want):
+                new.setdefault(row[key], []).append(row)
     nulls = [None] * len(others)
 
     def _diff_rows():
@@ -489,161 +446,30 @@ def _read_cdc_spec(spec: dict):
             olds, news = old.get(k, []), new.get(k, [])
             if not news:
                 for o in olds:
-                    yield (k, "D", *[o[i] for i in others], *nulls)
+                    yield (k, "D", *[o[c] for c in others], *nulls)
             elif not olds:
                 for n in news:
-                    yield (k, "I", *nulls, *[n[i] for i in others])
+                    yield (k, "I", *nulls, *[n[c] for c in others])
             else:
                 for o in olds:
                     for n in news:
-                        if all(o[i] == n[i] for i in others):
+                        if all(o[c] == n[c] for c in others):
                             continue  # copy-on-write carryover: unchanged
                         yield (
                             k,
                             "U",
-                            *[o[i] for i in others],
-                            *[n[i] for i in others],
+                            *[o[c] for c in others],
+                            *[n[c] for c in others],
                         )
 
-    # Arrow fast path for the version-diff legs (optimization r15,
-    # VERDICT r14 item 2 — the 'insert' leg was batched in r14): the
-    # diff algebra above is inherently row/key-wise Python, but its
-    # OUTPUT no longer crosses to the JVM as a pickled tuple per row —
-    # the rows are transposed into typed arrow columns and emitted as
-    # ONE RecordBatch per spec. Same gate as _read_spec; non-mappable
-    # declared types keep the tuple path.
-    arrow_ok = all(typ in _PA_OF_TYPE for _, _, typ in fields)
-    if not arrow_ok:
-        yield from _diff_rows()
-        return
-    import pyarrow as pa
-
-    rows = list(_diff_rows())
-    key_t = pa.type_for_alias(_PA_OF_TYPE[fields[ki][2]])
-    col_ts = [key_t, pa.string()] + [
-        pa.type_for_alias(_PA_OF_TYPE[fields[i][2]]) for i in others
-    ] * 2
-    names = (
-        [key, "op"]
-        + [f"old_{fields[i][0]}" for i in others]
-        + [f"new_{fields[i][0]}" for i in others]
-    )
-    try:
-        batch = pa.RecordBatch.from_arrays(
-            [
-                pa.array([r[c] for r in rows], type=t)
-                for c, t in enumerate(col_ts)
-            ],
-            names=names,
-        )
-    except pa.lib.ArrowInvalid:
-        # a schema-evolved file fed _file_rows values whose physical
-        # type defeats the declared-type array build (ADVICE r14
-        # class): fall back to the pickled-tuple path, whose per-value
-        # coercion is the documented behavior
-        yield from rows
-        return
-    yield batch
+    yield from rows_to_batches(_diff_rows(), schema)
 
 
-# Spark typeName -> pyarrow type for the Arrow fast path of
-# _read_spec. Only types with an unambiguous 1:1 arrow mapping are
-# listed; any other declared type routes the whole file through the
-# row path.
-_PA_OF_TYPE = {
-    "byte": "int8",
-    "short": "int16",
-    "integer": "int32",
-    "long": "int64",
-    "float": "float32",
-    "double": "float64",
-    "string": "string",
-    "boolean": "bool",
-}
-
-
-def _file_batches(path: str, fields: list[tuple], part_vals: dict):
-    """Arrow fast path of _read_spec (optimization r14, guide §4.1):
-    yield the file's rows as pyarrow RecordBatches — the Python data
-    source API accepts them directly, so no per-row Python tuple is
-    ever built (the row path materialized every cell via to_pylist +
-    zip). Columns are cast to the declared stream types; hive
-    partition values broadcast as constant arrays; columns the file
-    predates come back as typed nulls."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(path)
-    n = tbl.num_rows
-    names = set(tbl.schema.names)
-    arrays, out_names = [], []
-    for logical, phys, typ in fields:
-        t = pa.type_for_alias(_PA_OF_TYPE[typ])
-        if phys in names:
-            arrays.append(tbl.column(phys).cast(t))
-        elif phys in part_vals:
-            raw = part_vals[phys]
-            v = (
-                None
-                if raw is None
-                else int(raw)
-                if typ in _INT_TYPES
-                else raw
-            )
-            arrays.append(pa.chunked_array([pa.array([v] * n, type=t)]))
-        else:
-            arrays.append(pa.chunked_array([pa.nulls(n, type=t)]))
-        out_names.append(logical)
-    if not arrays:
-        return
-    yield from pa.table(arrays, names=out_names).to_batches()
-
-
-def _read_spec(spec: dict):
-    """Executor-side file read: yield the declared-field projection of
-    one file — parquet columns under their physical names, hive
-    partition values from the path, nulls for columns the file
-    predates. Arrow-batched whenever every declared type has a 1:1
-    arrow mapping and every partition-sourced value is int/string
-    (exactly the cases whose row-path coercion is a plain cast);
-    otherwise the original row path."""
-    fields = spec["fields"]
-    part_vals = spec["part_vals"]
-    arrow_ok = all(typ in _PA_OF_TYPE for _, _, typ in fields) and all(
-        typ in _INT_TYPES or typ == "string"
-        for _, phys, typ in fields
-        if phys in part_vals
-    )
-    if arrow_ok:
-        try:
-            # materialized before yielding: every cast in
-            # _file_batches happens while the file's table is built,
-            # so an ArrowInvalid can only fire before the first batch
-            # is emitted — the fallback never duplicates rows
-            batches = list(
-                _file_batches(spec["path"], fields, part_vals)
-            )
-        except Exception as exc:  # noqa: BLE001
-            import pyarrow as pa
-
-            if not isinstance(exc, pa.lib.ArrowInvalid):
-                raise
-            # ADVICE r14: a schema-evolved file whose PHYSICAL column
-            # type differs from the declared one (e.g. stored double,
-            # declared long) fails the safe arrow cast — route that
-            # file through the row path, whose per-value coercion is
-            # the documented behavior
-            yield from _file_rows(spec["path"], fields, part_vals)
-            return
-        yield from batches
-    else:
-        yield from _file_rows(spec["path"], fields, part_vals)
-
-
+@functools.cache
 def make_versioned_table_source():
-    """Build (and return) the DataSource class. Deferred import so the
-    module stays importable on Spark versions without the Python data
-    source API."""
+    """Build (once per process) and return the DataSource class.
+    Deferred import so the module stays importable on Spark versions
+    without the Python data source API."""
     from pyspark.sql.datasource import (
         DataSource,
         DataSourceStreamReader,
@@ -762,29 +588,26 @@ def make_versioned_table_source():
             # that's ~0.5s of JSON parse per micro-batch without the
             # cache, ~0 with; capped FIFO so long streams stay small)
             self._mcache: dict[int, dict] = {}
-            # (logical, physical, type) per TABLE field, FIXED at
+            # (logical, physical, Arrow type) per TABLE field, FIXED at
             # stream start: physical names are immutable per column id,
             # so this projection is valid for files of every version.
-            # (In CDC mode the declared schema is derived — key, op,
-            # old_*, new_* — so fields come from the manifest, which
-            # schema() read the same instant.)
+            # The types are to_arrow_schema's — what Spark's tuple path
+            # hands the JVM. (In CDC mode the declared schema is
+            # derived — key, op, old_*, new_* — so the table fields
+            # come from the manifest, which schema() read the same
+            # instant.)
+            from pyspark.sql.pandas.types import to_arrow_schema
+            from pyspark.sql.types import StructType
+
             m = manifest_info(self.table)
             mapping, _, _ = _mapping_state(m, m.get("schema"))
             phys_of = {mp["name"]: mp["physical"] for mp in mapping}
-            if self.cdc_key is None:
-                self.fields = [
-                    (
-                        f.name,
-                        phys_of.get(f.name, f.name),
-                        f.dataType.typeName(),
-                    )
-                    for f in schema.fields
-                ]
-            else:
-                self.fields = [
-                    (f["name"], phys_of.get(f["name"], f["name"]), f["type"])
-                    for f in m["schema"]["fields"]
-                ]
+            if self.cdc_key is not None:
+                schema = StructType.fromJson(m["schema"])
+            self.fields = [
+                (f.name, phys_of.get(f.name, f.name), a.type)
+                for f, a in zip(schema, to_arrow_schema(schema))
+            ]
 
         def _sidecar_path(self) -> str:
             return os.path.join(
@@ -1049,13 +872,9 @@ def make_versioned_table_source():
 
 
 def register_stream_source(spark: SparkSession) -> None:
-    """Register the source under format 'mimr_versioned_table'
-    (idempotent per session)."""
-    try:
-        spark.dataSource.register(make_versioned_table_source())
-    except Exception as exc:  # already registered in this session
-        if "already" not in str(exc).lower():
-            raise
+    """Register the source under format 'mimr_versioned_table', once
+    per session."""
+    register_once(spark, make_versioned_table_source())
 
 
 def stream_id_for_checkpoint(checkpoint: str) -> str:

@@ -119,3 +119,20 @@ def test_hll_partitioning_invariant(spark, sf_dir):
         .collect()[0]["e"]
     )
     assert e1 == e16 == via_union
+
+
+def test_kll_flags_hold_vacuously_on_empty_lineitem(spark, sf_dir, tmp_path):
+    """On an empty lineitem with the fixture's schema q_sketch_kll
+    returns what its oracle states: n_rows 0 and both flags TRUE, not
+    NULL (SUM over zero rows is NULL unless coalesced)."""
+    empty = str(tmp_path / "empty_sf")
+    load_table(spark, sf_dir, "lineitem").limit(0).write.parquet(
+        f"{empty}/lineitem.parquet"
+    )
+    (row,) = registry.queries()["q_sketch_kll"](spark, empty).collect()
+    assert row.asDict() == {
+        "scope": "ALL",
+        "n_rows": 0,
+        "median_ok": True,
+        "p99_ok": True,
+    }
